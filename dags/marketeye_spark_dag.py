@@ -5,6 +5,13 @@ start → extract+merge (ONE Spark job — the 3-source fan-in is lazy plan
 evaluation, not task orchestration) → stats → report → [jdbc ∥ mongo ∥
 backup] → end, @daily, catchup=False, retries=1/5min, 1 h timeout.
 
+Hand-off contract: only ``task_etl`` reads the raw files
+(``MARKETEYE_RAW_DIR``).  It materializes the merged catalog as
+``marketeye_final``; every downstream task reads that catalog back
+through ``sinks.read_json_products`` (master schema) and derives what it
+needs with ``jobs.summarize`` — the reference's file hand-off between
+stages (dags/marketeye_etl_dag.py:726-728), with no re-extract.
+
 Import-gated: this module is inert without Airflow installed.  Each task
 calls a library function via a fresh SparkSession — on a real deployment
 swap PythonOperator for SparkSubmitOperator with the same entry points;
@@ -42,10 +49,9 @@ def _session():
 
 
 def task_etl(**_):
-    """extract+merge+stats as ONE Spark job; materializes the final
-    nested JSON + flat offers CSV the downstream sink tasks read — the
-    reference's file-handoff contract (dags/marketeye_etl_dag.py:726-728)
-    with the per-stage re-reads collapsed into one cached plan."""
+    """extract+merge+stats as ONE Spark job, and the only task that reads
+    raw: materializes the final nested JSON catalog (``marketeye_final``)
+    + flat offers CSV, and returns the dataset statistics as its XCom."""
     from etl_marketeye_airflow_spark.jobs import run_etl
     from etl_marketeye_airflow_spark.sinks import write_csv_offers, write_json_products
 
@@ -56,16 +62,17 @@ def task_etl(**_):
 
 
 def _read_final(spark):
-    return spark.read.json(f"{_out_dir()}/marketeye_final")
+    from etl_marketeye_airflow_spark.sinks import read_json_products
+
+    return read_json_products(spark, f"{_out_dir()}/marketeye_final")
 
 
 def task_report(ti=None, **_):
-    from etl_marketeye_airflow_spark.jobs import run_etl
+    from etl_marketeye_airflow_spark.jobs import summarize
     from etl_marketeye_airflow_spark.operators.stats import render_report
     from datetime import datetime as dt
 
-    spark = _session()
-    res = run_etl(spark, _raw_dir())
+    res = summarize(_read_final(_session()))
     report = render_report(
         res.statistics.collect()[0],
         res.brand_distribution.collect(),
@@ -85,10 +92,10 @@ def task_jdbc(connection_factory=None, **_):
     url = os.environ.get("MARKETEYE_JDBC_URL")
     if not url:
         return "skipped: MARKETEYE_JDBC_URL not set"
-    from etl_marketeye_airflow_spark.jobs import run_etl
+    from etl_marketeye_airflow_spark.jobs import summarize
     from etl_marketeye_airflow_spark.sinks.sinks import write_jdbc_relational
 
-    res = run_etl(_session(), _raw_dir())
+    res = summarize(_read_final(_session()))
     write_jdbc_relational(
         res.merged,
         res.offers_flat,

@@ -418,7 +418,7 @@ def _spread_heavy_scan(
     """Repartition a scan feeding HEAVY per-row expression work, but
     only when it is genuinely under-split for its size: fewer scan
     partitions than cores AND more than SPARK_GRAFT_SPREAD_MIN_MB
-    (default 32) of file bytes per partition.
+    (default 32, also on a malformed value) of file bytes per partition.
 
     A single-row-group parquet file scans as ONE task no matter how
     many byte-range splits Spark plans (only the split holding the row
@@ -442,9 +442,11 @@ def _spread_heavy_scan(
         sz = _os.path.getsize(_os.path.join(sf_dir, f"{table}.parquet"))
     except OSError:
         sz = 0
-    min_bytes = int(
-        _os.environ.get("SPARK_GRAFT_SPREAD_MIN_MB", "32")
-    ) << 20
+    try:
+        min_mb = int(_os.environ.get("SPARK_GRAFT_SPREAD_MIN_MB", "32"))
+    except ValueError:
+        min_mb = 32
+    min_bytes = min_mb << 20
     if sz // max(1, n_parts) > min_bytes:
         return df.repartition(par)
     return df

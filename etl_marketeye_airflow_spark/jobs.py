@@ -5,19 +5,23 @@ here the whole ETL is ONE lazy plan: read 3 sources → project → union →
 merge-groupBy → cache → fan out to stats/report/sinks.  The merged DF is
 persisted once and reused by every consumer (the reference re-reads the
 file per sink — SURVEY §4 'redundant recomputation').
+
+``run_etl`` goes from raw files to results; ``summarize`` goes from a
+merged catalog to results, so a consumer of the materialized catalog
+(``sinks.read_json_products``) derives the same figures without
+re-extracting.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .adapters import transform_avito, transform_electroplanet, transform_jumia
+from .adapters import ADAPTERS, RAW_SCHEMAS
 from .operators import anomaly as anomaly_ops
 from .operators import stats as stats_ops
 from .operators.merge import flatten_offers, merge_products, union_sources
-from .schemas import AVITO_RAW_SCHEMA, ELECTROPLANET_RAW_SCHEMA, JUMIA_RAW_SCHEMA
 from .sources.json_source import read_source
 
 
@@ -29,23 +33,21 @@ class EtlResult:
     brand_distribution: DataFrame
     source_counts: DataFrame
     condition_distribution: DataFrame
-    extras: dict = field(default_factory=dict)
 
 
 def extract_all(spark: SparkSession, raw_dir: str) -> DataFrame:
-    """3 extracts + union, all lazy — Catalyst sees one plan."""
-    avito = transform_avito(read_source(spark, raw_dir, "avito", AVITO_RAW_SCHEMA))
-    jumia = transform_jumia(read_source(spark, raw_dir, "jumia", JUMIA_RAW_SCHEMA))
-    electro = transform_electroplanet(
-        read_source(spark, raw_dir, "electroplanet", ELECTROPLANET_RAW_SCHEMA)
+    """One extract per source + union, all lazy — Catalyst sees one plan.
+    Sources union in ``ADAPTERS`` order; the merge's last write wins."""
+    return union_sources(
+        *(
+            transform(read_source(spark, raw_dir, source, RAW_SCHEMAS[source]))
+            for source, transform in ADAPTERS.items()
+        )
     )
-    return union_sources(avito, jumia, electro)
 
 
-def run_etl(spark: SparkSession, raw_dir: str, persist: bool = True) -> EtlResult:
-    merged = merge_products(extract_all(spark, raw_dir))
-    if persist:
-        merged = merged.persist()
+def summarize(merged: DataFrame) -> EtlResult:
+    """Flat offers, statistics and distributions of a merged catalog."""
     offers = flatten_offers(merged)
     return EtlResult(
         merged=merged,
@@ -55,6 +57,11 @@ def run_etl(spark: SparkSession, raw_dir: str, persist: bool = True) -> EtlResul
         source_counts=stats_ops.offers_per_source(offers),
         condition_distribution=stats_ops.condition_distribution(offers),
     )
+
+
+def run_etl(spark: SparkSession, raw_dir: str, persist: bool = True) -> EtlResult:
+    merged = merge_products(extract_all(spark, raw_dir))
+    return summarize(merged.persist() if persist else merged)
 
 
 def run_anomaly_analysis(

@@ -648,7 +648,6 @@ def strip_frequent_grams(
     text_col: str = "text",
     k: int = 2,
     max_doc_permille: int = 80,
-    persist_grams: bool = False,
 ) -> DataFrame:
     """C4-style boilerplate stripping, gram-level: any word ``k``-gram
     present in more than ``max_doc_permille``/1000 of documents is
@@ -667,7 +666,9 @@ def strip_frequent_grams(
     definition it holds only grams in >5% of docs, so it is SMALL);
     removal is an anti-join on (doc, pos); reassembly sorts only
     per-doc kept tokens (array_sort of collected structs, bounded by
-    doc length).
+    doc length).  ``grams`` feeds both the df table and the removal
+    join unpersisted: caching it lost in the r13 A B B A
+    (probes/r13_strip_persist_ab.json).
     """
     from .dedup import spread, words
 
@@ -688,18 +689,6 @@ def strip_frequent_grams(
         .filter(F.size(F.split(F.col("_g"), " ")) == k)
         .select("doc_id", "_pos", "_g")
     )
-    if persist_grams:
-        # ``grams`` fans out into the document-frequency branch AND the
-        # removal join — each evaluation re-pays the token-stream
-        # exchange + per-doc sort behind the lead() window.  Persisting
-        # trades one corpus-scale MEMORY_AND_DISK cache (spills, never
-        # OOMs — guide §5) for the second window evaluation.  Opt-in:
-        # the r13 skew-seed A/B (probes/r13_strip_persist_ab.json)
-        # decides the caller default; lifecycle is the caller's
-        # (gate/bench clearCache between queries).
-        from pyspark.storagelevel import StorageLevel
-
-        grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
     df_tbl = (
         grams.select("doc_id", "_g")
         .distinct()

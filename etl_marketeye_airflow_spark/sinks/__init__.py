@@ -1,5 +1,6 @@
 from .bucketed import read_bucketed, write_bucketed
 from .sinks import (
+    read_json_products,
     write_csv_offers,
     write_jdbc_relational,
     write_json_products,
@@ -9,6 +10,7 @@ from .sinks import (
 
 __all__ = [
     "read_bucketed",
+    "read_json_products",
     "write_bucketed",
     "write_csv_offers",
     "write_jdbc_relational",

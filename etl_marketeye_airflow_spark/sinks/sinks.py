@@ -22,13 +22,22 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..schemas import MASTER_SCHEMA
 
 
 def write_json_products(merged: DataFrame, path: str) -> None:
     """S4: nested master documents as NDJSON (overwrite)."""
     merged.write.mode("overwrite").json(path)
+
+
+def read_json_products(spark: SparkSession, path: str) -> DataFrame:
+    """Inverse of ``write_json_products``: the catalog read back with the
+    master schema, so a field the writer omitted (null in every row it
+    wrote) comes back as an explicit null, not a missing column."""
+    return spark.read.schema(MASTER_SCHEMA).json(path)
 
 
 def write_csv_offers(offers_flat: DataFrame, path: str) -> None:

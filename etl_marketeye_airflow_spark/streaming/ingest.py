@@ -21,9 +21,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..adapters import transform_avito, transform_electroplanet, transform_jumia
+from ..adapters import ADAPTERS, RAW_SCHEMAS
 from ..operators.merge import merge_products, union_sources
-from ..schemas import AVITO_RAW_SCHEMA, ELECTROPLANET_RAW_SCHEMA, JUMIA_RAW_SCHEMA
+from ..sinks.sinks import read_json_products, write_json_products
+
+# NDJSON filename globs of the streaming path; batch discovery uses
+# ``config.SOURCE_PATTERNS`` instead (json_source.discover_source_files).
+_STREAM_GLOBS = {"avito": "*avito*", "jumia": "*jumia*", "electroplanet": "*electro*"}
 
 
 def drain_available_now(q, timeout_s: float | None = None) -> None:
@@ -87,22 +91,19 @@ def stream_etl_available_now(
     then finishes; call .awaitTermination()).
     """
     streams = []
-    for schema, transform, glob in (
-        (AVITO_RAW_SCHEMA, transform_avito, "*avito*"),
-        (JUMIA_RAW_SCHEMA, transform_jumia, "*jumia*"),
-        (ELECTROPLANET_RAW_SCHEMA, transform_electroplanet, "*electro*"),
-    ):
+    for source, transform in ADAPTERS.items():
         # Streaming file source reads NDJSON only (one record per line) —
         # the standard landing format for continuously-arriving scrapes.
         # Array-layout files belong to the batch path (json_source.py
         # probes per file; a stream can't).  Corrupt lines are dropped
         # via the corrupt-record column, same as batch S2.
         schema_c = T.StructType(
-            list(schema.fields) + [T.StructField("_corrupt_record", T.StringType(), True)]
+            list(RAW_SCHEMAS[source].fields)
+            + [T.StructField("_corrupt_record", T.StringType(), True)]
         )
         raw = (
             spark.readStream.schema(schema_c)
-            .option("pathGlobFilter", glob)
+            .option("pathGlobFilter", _STREAM_GLOBS[source])
             .option("mode", "PERMISSIVE")
             .option("columnNameOfCorruptRecord", "_corrupt_record")
             .json(raw_dir)
@@ -113,8 +114,6 @@ def stream_etl_available_now(
     unioned = union_sources(*streams)
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from ..schemas import MASTER_SCHEMA
-
         sp = batch_df.sparkSession
         hconf = sp._jsc.hadoopConfiguration()
         jvm = sp._jvm
@@ -123,11 +122,11 @@ def stream_etl_available_now(
         tmp = f"{out_path}.tmp-{epoch_id}"
 
         if fs.exists(out_p):
-            prev = sp.read.schema(MASTER_SCHEMA).json(out_path)
+            prev = read_json_products(sp, out_path)
             combined = prev.unionByName(batch_df)
         else:
             combined = batch_df
-        merge_products(combined).write.mode("overwrite").json(tmp)
+        write_json_products(merge_products(combined), tmp)
         fs.delete(out_p, True)
         fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), out_p)
 

@@ -2,7 +2,8 @@
 task's python_callable in reference dependency order (etl → report →
 [jdbc ∥ mongo ∥ backup]) against the fixtures dir and check the results
 against a direct jobs.run_etl — the DAG must be pure glue over the same
-library functions (reference dags/marketeye_etl_dag.py:1016-1090)."""
+library functions (reference dags/marketeye_etl_dag.py:1016-1090), and
+only task_etl may read raw: the rest hand off through the catalog."""
 
 import importlib.util
 import json
@@ -22,7 +23,10 @@ def _dag_module():
 
 
 def test_dag_callables_execute_in_dependency_order(spark, tmp_path, monkeypatch):
+    from etl_marketeye_airflow_spark import jobs
     from etl_marketeye_airflow_spark.jobs import run_etl
+    from etl_marketeye_airflow_spark.operators.stats import render_report
+    from etl_marketeye_airflow_spark.sinks.sinks import mongo_document_rows
 
     out = tmp_path / "processed"
     out.mkdir()
@@ -47,10 +51,24 @@ def test_dag_callables_execute_in_dependency_order(spark, tmp_path, monkeypatch)
     }
     assert spark.read.option("header", True).csv(str(out / "offers_csv")).count() == 8
 
+    # downstream tasks hand off through marketeye_final: no raw re-read
+    def no_raw(*a, **kw):
+        raise AssertionError("a downstream task read the raw files")
+
+    monkeypatch.setattr(jobs, "run_etl", no_raw)
+    monkeypatch.setattr(jobs, "read_source", no_raw)
+    monkeypatch.setenv("MARKETEYE_RAW_DIR", str(tmp_path / "no_raw_dir"))
+
     # --- task 2: generate_report ---------------------------------------
     report_path = dag.task_report()
-    text = Path(report_path).read_text(encoding="utf-8")
-    assert str(stats["total_products"]) in text
+    lines = Path(report_path).read_text(encoding="utf-8").splitlines()
+    want_lines = render_report(
+        direct.statistics.collect()[0], direct.brand_distribution.collect(), "TS"
+    ).splitlines()
+    ts_line = want_lines.index("RAPPORT ETL MARKETEYE - TS")
+    assert lines[ts_line].startswith("RAPPORT ETL MARKETEYE - ")
+    del lines[ts_line], want_lines[ts_line]
+    assert lines == want_lines
 
     # --- fan-out: save_to_postgresql (env-gated skip is explicit) ------
     assert dag.task_jdbc() == "skipped: MARKETEYE_JDBC_URL not set"
@@ -96,9 +114,13 @@ def test_dag_callables_execute_in_dependency_order(spark, tmp_path, monkeypatch)
     for p in spool.glob("b-*.jsonl"):
         with open(p) as f:
             docs += [json.loads(line) for line in f]
-    assert {d["product_id"] for d in docs} == {
-        r.product_id for r in direct.merged.select("product_id").collect()
-    }
+    # the full master shape, explicit nulls included; direct.merged is
+    # served from task_etl's cached merge (same plan), so even the
+    # run-clock metadata stamps agree
+    assert sorted(json.dumps(d, sort_keys=True) for d in docs) == sorted(
+        json.dumps(json.loads(r.doc_json), sort_keys=True)
+        for r in mongo_document_rows(direct.merged).collect()
+    )
 
     # --- fan-out: json_backup backs up the SHIPPED file ----------------
     backup_path = dag.task_backup()

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from etl_marketeye_airflow_spark.jobs import run_etl
 from etl_marketeye_airflow_spark.operators.enrich import enrich_with_http, ollama_analyze
 from etl_marketeye_airflow_spark.sinks import (
+    read_json_products,
     write_csv_offers,
     write_json_products,
     write_timestamped_backup,
@@ -31,7 +32,9 @@ def etl(spark):
 def test_json_and_csv_and_backup_sinks(spark, etl, tmp_path_factory):
     out = tmp_path_factory.mktemp("sinks")
     write_json_products(etl.merged, str(out / "final"))
-    assert spark.read.json(str(out / "final")).count() == 6
+    back = read_json_products(spark, str(out / "final"))
+    assert back.columns == etl.merged.columns
+    assert sorted(back.collect()) == sorted(etl.merged.collect())
 
     write_csv_offers(etl.offers_flat, str(out / "offers"))
     csv = spark.read.option("header", True).csv(str(out / "offers"))

@@ -40,6 +40,9 @@ def test_fires_on_undersplit_heavy_scan(tmp_path, spark, monkeypatch):
         assert out.count() == df.count()
     else:  # already well-split (e.g. 1-2 core test session): no-op
         assert out is df
+    # a malformed floor falls back to the 32 MB default: no-op on this file
+    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MIN_MB", "32MB")
+    assert _spread_heavy_scan(df, str(tmp_path / "sf"), "documents") is df
 
 
 def test_noop_when_scan_already_feeds_cores(spark, tmp_path):
