@@ -212,10 +212,28 @@ def main() -> None:
                 "pyloop2m_s": round(py, 3),
                 "memsum200mb_s": round(mem, 3)}
 
+    jvm = spark.sparkContext._jvm
+
+    def codegen_totals() -> tuple[int, float]:
+        """(Janino compiles, compile ms) so far in this JVM: the count of
+        Spark's CodegenMetrics compile histogram and CodeGenerator's
+        exact sum of the same compile durations.  Read outside the timed
+        region; a JVM without them reads zeros."""
+        try:
+            n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+            ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+            return int(n), ns / 1e6
+        except Exception:  # noqa: BLE001 — observability only
+            return 0, 0.0
+
     calib_samples = [_calib_sample()]
     calib_positions = [0]  # sweep index each sample was taken at
 
     timings: dict[str, float] = {}
+    # per query: Janino compiles + compile ms of the first attempt and of
+    # the repeats together (a repeat served from the codegen cache
+    # compiles nothing) — bench_full.json only
+    codegen: dict[str, dict] = {}
     # fixed numeric order, NOT the rotating driver-sweep order — bench
     # deltas must compare like with like across rounds.  The optional
     # SPARK_GRAFT_BENCH_NAMES=qa,qb filter exists for targeted scale
@@ -248,6 +266,7 @@ def main() -> None:
             pass
         time.sleep(0.05)
         best = float("inf")
+        compiled: list[tuple[int, float]] = []
         for _ in range(max(1, runs)):
             # fan-out operators (minhash/simhash/vocab) unpersist their
             # own bases (eager materialize-then-release); the sweep here
@@ -277,8 +296,16 @@ def main() -> None:
                     file=sys.stderr,
                     flush=True,
                 )
+            c0 = codegen_totals()
             best = min(best, timed_attempt(name, fn))
+            c1 = codegen_totals()
+            compiled.append((c1[0] - c0[0], c1[1] - c0[1]))
         timings[name] = round(best, 3)
+        codegen[name] = {
+            part: {"compiles": sum(c[0] for c in cs),
+                   "compile_ms": round(sum(c[1] for c in cs), 1)}
+            for part, cs in (("first", compiled[:1]), ("repeats", compiled[1:]))
+        }
         # progress to STDERR only — the driver parses the one stdout
         # JSON line; this is for humans tailing a long sf1 run (and for
         # locating a hang, which burned 16 min of a round-6 probe)
@@ -334,6 +361,7 @@ def main() -> None:
         "queries_norm": queries_norm,
         "calib_positions": calib_positions,
         "norm_model": f"value*({NOMINAL_MEMSUM_S}/max({NOMINAL_MEMSUM_S},memsum_med))^{BETA}",
+        "codegen": codegen,
     }
     print("[bench] full: " + json.dumps(full), file=sys.stderr, flush=True)
     # subset probes (SPARK_GRAFT_BENCH_NAMES) must not clobber the

@@ -72,10 +72,18 @@ def rank_quantile_boundaries(
     localCheckpoint'ed so partition ids stay frozen between the count
     job and the extraction job (same determinism argument as
     operators/ranking.py — a recomputed range exchange re-samples its
-    boundaries).
+    boundaries).  Input columns must not collide with the internal
+    ``_pid``/``_pn``/``_lrn`` names (guarded).
     """
     from .ranking import release_local_checkpoint
 
+    reserved = {"_pid", "_pn", "_lrn"}
+    clash = reserved & set(df.columns)
+    if clash:
+        raise ValueError(
+            f"rank_quantile_boundaries: input columns {sorted(clash)} "
+            "collide with internal names — rename them first"
+        )
     spark = df.sparkSession
     n_parts = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions")

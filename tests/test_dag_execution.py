@@ -22,6 +22,44 @@ def _dag_module():
     return mod
 
 
+def _spool_client(spool_s: str):
+    """A pymongo-shaped client factory that spools inserted documents to
+    JSONL files under ``spool_s`` (closures, so Spark ships it by value)."""
+
+    def make_client():
+        import json as _json
+        import os as _os
+        import uuid as _uuid
+
+        class Coll:
+            def delete_many(self, q):
+                pass
+
+            def insert_many(self, docs):
+                p = _os.path.join(spool_s, f"b-{_uuid.uuid4().hex}.jsonl")
+                with open(p, "w") as f:
+                    for d in docs:
+                        f.write(_json.dumps(d, sort_keys=True) + "\n")
+
+            def create_index(self, keys, **kw):
+                pass
+
+        class DB:
+            def __getitem__(self, name):
+                return Coll()
+
+        class Client:
+            def __getitem__(self, name):
+                return DB()
+
+            def close(self):
+                pass
+
+        return Client()
+
+    return make_client
+
+
 def test_dag_callables_execute_in_dependency_order(spark, tmp_path, monkeypatch):
     from etl_marketeye_airflow_spark import jobs
     from etl_marketeye_airflow_spark.jobs import run_etl
@@ -76,40 +114,7 @@ def test_dag_callables_execute_in_dependency_order(spark, tmp_path, monkeypatch)
     # --- fan-out: save_to_mongodb with an injected spool client --------
     spool = tmp_path / "mongo"
     spool.mkdir()
-    spool_s = str(spool)
-
-    def make_client():
-        import json as _json
-        import os as _os
-        import uuid as _uuid
-
-        class Coll:
-            def delete_many(self, q):
-                pass
-
-            def insert_many(self, docs):
-                p = _os.path.join(spool_s, f"b-{_uuid.uuid4().hex}.jsonl")
-                with open(p, "w") as f:
-                    for d in docs:
-                        f.write(_json.dumps(d, sort_keys=True) + "\n")
-
-            def create_index(self, keys, **kw):
-                pass
-
-        class DB:
-            def __getitem__(self, name):
-                return Coll()
-
-        class Client:
-            def __getitem__(self, name):
-                return DB()
-
-            def close(self):
-                pass
-
-        return Client()
-
-    assert dag.task_mongo(client_factory=make_client) == 6
+    assert dag.task_mongo(client_factory=_spool_client(str(spool))) == 6
     docs = []
     for p in spool.glob("b-*.jsonl"):
         with open(p) as f:
@@ -130,6 +135,54 @@ def test_dag_callables_execute_in_dependency_order(spark, tmp_path, monkeypatch)
     assert dag.task_mongo() == "skipped: MARKETEYE_MONGO_URI not set"
 
     direct.merged.unpersist()
+
+
+def _janino_compiles(spark) -> int:
+    """Classes Janino has compiled so far in this JVM (Spark's
+    ``CodegenMetrics``; driver and local executors share the JVM)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_dag_chain_compiles_no_classes(spark, tmp_path, monkeypatch):
+    """The daily DAG plans the same jobs every run, so a warm run must be
+    served from the generated-class cache.  Spark's default cache (100
+    entries) is smaller than this chain's working set; LRU eviction then
+    drops each class just before its next use and every warm run
+    recompiles all of them.  ``get_spark`` sizes the cache to hold it.
+    The chain is one benchmark DAG operation: the tasks, then the
+    anomaly analysis of the shipped catalog."""
+    from etl_marketeye_airflow_spark.jobs import run_anomaly_analysis
+    from etl_marketeye_airflow_spark.operators.merge import flatten_offers
+    from etl_marketeye_airflow_spark.sinks import read_json_products
+
+    monkeypatch.setenv("MARKETEYE_RAW_DIR", FIXTURES)
+    monkeypatch.delenv("MARKETEYE_MONGO_URI", raising=False)
+    dag = _dag_module()
+
+    def chain(out):
+        spool = out / "mongo"
+        spool.mkdir(parents=True)
+        monkeypatch.setenv("MARKETEYE_OUT_DIR", str(out))
+        # each task is its own process under Airflow: nothing persists
+        spark.catalog.clearCache()
+        assert dag.task_etl()["total_products"] == 6
+        spark.catalog.clearCache()
+        dag.task_report()
+        assert dag.task_mongo(client_factory=_spool_client(str(spool))) == 6
+        dag.task_backup()
+        final = read_json_products(spark, str(out / "marketeye_final"))
+        res = run_anomaly_analysis(flatten_offers(final), top_n=10)
+        res["top_anomalies"].collect()
+        res["type_distribution"].collect()
+        spark.catalog.clearCache()
+
+    compiles = []
+    for run in range(2):
+        before = _janino_compiles(spark)
+        chain(tmp_path / f"run{run}")
+        compiles.append(_janino_compiles(spark) - before)
+    assert compiles[1] == 0, f"warm DAG run recompiled {compiles[1]} classes ({compiles})"
 
 
 def test_dag_topology_matches_reference(monkeypatch):

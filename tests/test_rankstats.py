@@ -109,3 +109,9 @@ def test_only_boundary_partitions_sorted(spark):
     for k, b in enumerate(bnds, start=1):
         rb = -(-(k * n) // 4) + 1
         assert tuple(b) == ranked[rb - 1]
+
+
+def test_internal_column_clash_raises(spark):
+    df = spark.createDataFrame([(1, 1, 0)], "value long, key long, _pid int")
+    with pytest.raises(ValueError, match="_pid"):
+        rank_quantile_boundaries(df, "value", "key")

@@ -555,3 +555,29 @@ def test_bench_value_norm_model():
     assert 75 < got < 85
     assert bench.value_norm(100.0, 10.0) > bench.value_norm(100.0, 20.0)
     assert bench.value_norm(100.0, 20.0) < 100.0
+
+
+def test_count_exchanges_reports_each_node_kind():
+    from capture_plans import count_exchanges
+
+    plan = """== Physical Plan ==
+AdaptiveSparkPlan (9)
++- SortMergeJoin Inner (8)
+   :- Exchange (3)
+   :  +- BroadcastHashJoin Inner BuildRight (2)
+   :     :- Scan parquet  (1)
+   :     +- BroadcastExchange (4)
+   +- ReusedExchange (7)
+
+(3) Exchange
+Arguments: hashpartitioning(k#1, 8), ENSURE_REQUIREMENTS, [plan_id=10]
+
+(4) BroadcastExchange
+Arguments: HashedRelationBroadcastMode(List(k#2),false), [plan_id=11]
+
+(6) Exchange
+Arguments: hashpartitioning(k#3, 8), ENSURE_REQUIREMENTS, [plan_id=12]
+
+(7) ReusedExchange [Reuses operator id: 3]
+"""
+    assert count_exchanges(plan) == {"exchanges": 2, "reused": 1, "broadcast": 1}

@@ -33,12 +33,19 @@ def formatted_plan(df) -> str:
     return buf.getvalue()
 
 
-def count_exchanges(plan: str) -> int:
-    """Real Exchange nodes only — 'Exchange' substring counting also
-    matches every ReusedExchange (ADVICE r12), overstating before/after
-    evidence.  Formatted explain prints one '(n) Exchange' header line
-    per physical node."""
-    return len(re.findall(r"\(\d+\) Exchange\b", plan))
+def count_exchanges(plan: str) -> dict[str, int]:
+    """Physical exchange nodes by kind.  Formatted explain prints one
+    '(n) <Node>' header line per physical node; matching the header
+    keeps 'Exchange' from also counting every ReusedExchange (ADVICE
+    r12) or BroadcastExchange, which are reported as their own fields."""
+    return {
+        field: len(re.findall(rf"\(\d+\) {node}\b", plan))
+        for field, node in (
+            ("exchanges", "Exchange"),
+            ("reused", "ReusedExchange"),
+            ("broadcast", "BroadcastExchange"),
+        )
+    }
 
 
 def main() -> None:
@@ -56,9 +63,8 @@ def main() -> None:
         plan = formatted_plan(df)
         path = outdir / f"{name}_{suffix}.txt"
         path.write_text(plan)
-        n_ex = count_exchanges(plan)
-        n_reused = len(re.findall(r"\(\d+\) ReusedExchange\b", plan))
-        print(f"{path}  exchanges={n_ex} reused={n_reused}", flush=True)
+        counts = " ".join(f"{k}={v}" for k, v in count_exchanges(plan).items())
+        print(f"{path}  {counts}", flush=True)
 
 
 if __name__ == "__main__":
